@@ -18,13 +18,16 @@ bucket (idempotent).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 from dataclasses import asdict, dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import PySparkException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .config import PipelineConfig
 
@@ -46,10 +49,18 @@ class PartitionManifest:
     written_at_unix: float
 
 
+def bucket_col(cfg: PipelineConfig, n_buckets: int) -> Column:
+    return F.pmod(F.xxhash64(cfg.key_col), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, cfg: PipelineConfig, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(cfg.key_col), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn(BUCKET_COL, bucket_col(cfg, n_buckets))
+
+
+def schema_digest(schema: StructType) -> str:
+    """Stable id of an exported schema (column names and types): the same
+    in every process, unlike str.__hash__."""
+    return hashlib.sha256(schema.simpleString().encode()).hexdigest()[:16]
 
 
 def _bucket_fingerprints(df: DataFrame, cfg: PipelineConfig, cols: list[str]) -> dict[int, dict]:
@@ -57,8 +68,12 @@ def _bucket_fingerprints(df: DataFrame, cfg: PipelineConfig, cols: list[str]) ->
     aggregate pass. Checksum = sum of xxhash64 over the stringified row — the
     same trick the driver uses, cheap and associative."""
     # decimal(38,0) accumulator: order-insensitive, associative, and immune
-    # to ANSI long-overflow at any row count
-    rowhash = F.xxhash64(*[F.col(c).cast("string") for c in cols]).cast("decimal(38,0)")
+    # to ANSI long-overflow at any row count. SQL text: one parse instead of
+    # a py4j Column tree per column
+    rowhash = F.expr(
+        "CAST(xxhash64(" + ", ".join(f"CAST(`{c}` AS STRING)" for c in cols)
+        + ") AS DECIMAL(38,0))"
+    )
     agg = (
         df.groupBy(BUCKET_COL)
         .agg(
@@ -78,23 +93,32 @@ def _bucket_fingerprints(df: DataFrame, cfg: PipelineConfig, cols: list[str]) ->
     }
 
 
+def _bucket_files(out_dir: str, buckets: list[int]) -> dict[int, set[str]]:
+    return {b: {p.name for p in (Path(out_dir) / f"{BUCKET_COL}={b}").glob("*.parquet")}
+            for b in buckets}
+
+
 def manifest_path(out_dir: str, bucket: int) -> Path:
     return Path(out_dir) / MANIFEST_DIR / f"bucket={bucket}.json"
 
 
-def valid_buckets(out_dir: str, config_hash: str, input_fingerprint: str) -> set[int]:
-    """Buckets whose manifest exists and matches config + input — these are
-    skipped on resume."""
+def valid_buckets(out_dir: str, config_hash: str, input_fingerprint: str,
+                  schema_version: str) -> set[int]:
+    """Buckets whose manifest exists and matches config, input and exported
+    schema — these are skipped on resume. A bucket written with other
+    columns is rewritten, so a resumed table never mixes schemas."""
     mdir = Path(out_dir) / MANIFEST_DIR
     done = set()
     if not mdir.exists():
         return done
+    want = {"config_hash": config_hash, "input_fingerprint": input_fingerprint,
+            "schema_version": schema_version}
     for p in mdir.glob("bucket=*.json"):
         try:
             m = json.loads(p.read_text())
         except Exception:
             continue
-        if m.get("config_hash") == config_hash and m.get("input_fingerprint") == input_fingerprint:
+        if all(m.get(k) == v for k, v in want.items()):
             done.add(int(m["bucket"]))
     return done
 
@@ -106,35 +130,66 @@ def export_with_manifests(
     input_fingerprint: str,
     n_buckets: int = 16,
     resume: bool = True,
+    gate_cols: list[str] | None = None,
 ) -> dict:
-    """Write df partitioned by conv-bucket with one lineage manifest per
-    bucket; on resume, buckets with a valid manifest are skipped entirely
-    (their input rows are filtered out before any compute on the write side).
+    """Write df partitioned by conv-bucket in ONE pass over df, then one
+    lineage manifest per written bucket; on resume, buckets with a valid
+    manifest are skipped (filtered out of df; when every bucket is valid
+    nothing runs).
+
+    gate_cols: columns checked for NaN/Inf/null on the write pass itself
+    (validation.with_nan_inf_gate). A bad value aborts the write before
+    Spark's dynamic-overwrite commit and raises ValidationError, so the
+    previous data and manifests of every bucket stay as they were.
+
+    Rows, keys and checksum of each written bucket are read back from the
+    files just written (cheaper than recomputing df); manifests are written
+    only after that commit.
 
     Returns a run report {written_buckets, skipped_buckets, rows, wall_sec}.
     """
+    from . import validation
+
     spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     cfg_hash = cfg.config_hash()
-    bdf = with_bucket(df, cfg, n_buckets)
+    schema_version = schema_digest(df.schema)
+    done = valid_buckets(out_dir, cfg_hash, input_fingerprint, schema_version) if resume else set()
+    if len(done) >= n_buckets:
+        return {"written_buckets": [], "skipped_buckets": sorted(done), "rows": 0, "wall_sec": 0.0}
 
-    done = valid_buckets(out_dir, cfg_hash, input_fingerprint) if resume else set()
+    gated = validation.with_nan_inf_gate(df, gate_cols) if gate_cols else df
+    bdf = with_bucket(gated, cfg, n_buckets)
     todo = bdf.filter(~F.col(BUCKET_COL).isin(sorted(done))) if done else bdf
 
+    # a bucket was written iff its files changed: dynamic overwrite replaces
+    # exactly the buckets the pass had rows for, under a new write id
+    todo_buckets = [b for b in range(n_buckets) if b not in done]
+    before = _bucket_files(out_dir, todo_buckets)
     t0 = time.time()
-    value_cols = [c for c in df.columns]
-    fps = _bucket_fingerprints(todo, cfg, value_cols)
-    if fps:
+    try:
         (
-            todo.repartition(max(len(fps), 1), BUCKET_COL)
+            todo.repartition(len(todo_buckets), BUCKET_COL)
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
             .parquet(out_dir)
         )
+    except PySparkException as e:
+        validation.raise_gate_failure(e)
+        raise
+    after = _bucket_files(out_dir, todo_buckets)
+    written = [b for b in todo_buckets if after[b] and after[b] != before[b]]
+    fps = {}
+    if written:
+        back = (
+            spark.read.schema(bdf.schema)
+            .option("basePath", out_dir)
+            .parquet(*[f"{out_dir}/{BUCKET_COL}={b}" for b in written])
+        )
+        fps = _bucket_fingerprints(back, cfg, df.columns)
     wall = time.time() - t0
 
-    total_rows = sum(v["rows"] for v in fps.values())
     mdir = Path(out_dir) / MANIFEST_DIR
     mdir.mkdir(parents=True, exist_ok=True)
     for b, v in fps.items():
@@ -145,7 +200,7 @@ def export_with_manifests(
             value_checksum=v["checksum"],
             config_hash=cfg_hash,
             input_fingerprint=input_fingerprint,
-            schema_version=str(df.schema.simpleString().__hash__() & 0xFFFFFFFF),
+            schema_version=schema_version,
             wall_sec=round(wall, 3),
             rows_per_sec=round(v["rows"] / wall, 1) if wall > 0 else 0.0,
             written_at_unix=time.time(),
@@ -155,7 +210,7 @@ def export_with_manifests(
     return {
         "written_buckets": sorted(fps),
         "skipped_buckets": sorted(done),
-        "rows": total_rows,
+        "rows": sum(v["rows"] for v in fps.values()),
         "wall_sec": round(wall, 3),
     }
 
@@ -163,8 +218,6 @@ def export_with_manifests(
 def input_fingerprint_for_path(spark: SparkSession, path: str) -> str:
     """Cheap input snapshot id: file listing + sizes + mtimes hashed.
     (With Iceberg this is simply the snapshot id.)"""
-    import hashlib
-
     p = Path(path)
     h = hashlib.sha256()
     if p.is_file():

@@ -15,8 +15,10 @@ expressions use the same formulas in the same order.
 
 Scale: each executor core processes buckets independently in an Arrow-fed
 numpy kernel — no shared-JVM sort-buffer bandwidth contention, which is what
-caps Window-cascade scaling on many-core nodes. Mega-conversations should be
-pre-chunked (operators/skew.py) to bound bucket size.
+caps Window-cascade scaling on many-core nodes. Conversations longer than
+cfg.skew_max_turns_per_task are split into (conv, chunk) groups inside the
+same kernel pass (see _chunk_layout), so no group holds a whole
+mega-conversation.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import PipelineConfig
 from ..contract import (
@@ -35,14 +38,23 @@ from ..contract import (
     feature_columns,
 )
 from ..operators.order_stats import _bucket_order_stats, flow_vol_from_sig
-from .pipeline import max_conv_turns
+from ..operators.ordering import epoch_us
+from .pipeline import clean_input, max_conv_turns
+
+# carry-in fields of a chunk, in the order _chunk_carries stores them:
+# per-chunk sums, then session starts
+_SUMS = ("turns", "user", "assistant", "tool", "chars")
+_CARRY = (*_SUMS, "starts")
 
 
-def _segments(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+def _segments(keys: np.ndarray, chunks: np.ndarray | None = None
+              ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     n = len(keys)
     change = np.empty(n, dtype=bool)
     change[0] = True
     change[1:] = keys[1:] != keys[:-1]
+    if chunks is not None:
+        change[1:] |= chunks[1:] != chunks[:-1]
     starts = np.flatnonzero(change)
     sizes = np.diff(np.append(starts, n))
     conv_idx = np.repeat(np.arange(len(starts)), sizes)
@@ -59,9 +71,16 @@ def _seg_sliding_sum(vals: np.ndarray, gstart: np.ndarray, w: int) -> np.ndarray
     return cs[np.arange(n) + 1] - cs[lo]
 
 
-def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -> pd.DataFrame:
+def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool,
+            labeled_only: bool = True, carries: dict | None = None) -> pd.DataFrame:
+    """All features + TLOB labels for one Arrow group of whole conversations
+    or, on the chunked route, (conv, chunk) segments laid out by
+    _chunk_layout: context rows (_ctx == 1) feed the frames of the chunk's
+    real rows and are dropped from the output; cumulative state adds the
+    chunk's carry-in from ``carries`` (_chunk_carries)."""
     k, h, theta = cfg.labels.smoothing_k, cfg.labels.horizon, cfg.labels.threshold
-    sort_cols = [cfg.key_col] + list(cfg.order_cols)
+    chunked = "_chunk" in pdf.columns
+    sort_cols = [cfg.key_col, *(["_chunk"] if chunked else []), *cfg.order_cols]
     pdf = pdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
     n = len(pdf)
     keys = pdf[cfg.key_col].to_numpy()
@@ -69,11 +88,26 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
     us = pdf[cfg.ts_col].to_numpy(dtype="datetime64[us]").astype(np.int64)
     x = pdf["char_len"].to_numpy(dtype=np.float64)
     role = pdf["role"].to_numpy()
+    chunk = pdf["_chunk"].to_numpy() if chunked else None
+    real = pdf["_ctx"].to_numpy() == 0 if chunked else np.ones(n, dtype=bool)
 
-    starts, sizes, conv_idx, pos = _segments(keys)
+    starts, sizes, conv_idx, pos = _segments(keys, chunk)
     gstart = starts[conv_idx]
     gend = (starts + sizes)[conv_idx]  # exclusive
     rows = np.arange(n)
+
+    # carry-in per segment: zero, and the segment's own first timestamp,
+    # except for chunks after a conversation's first
+    carry = np.zeros((len(_CARRY), len(starts)))
+    first_us = us[starts]
+    if carries:
+        seg_chunk = chunk[starts]
+        for s in np.flatnonzero(seg_chunk > 0):
+            c = carries.get((keys[starts[s]], int(seg_chunk[s])))
+            if c is not None:  # None: context-only group past the last chunk
+                carry[:, s], first_us[s] = c[:-1], c[-1]
+    carry = carry[:, conv_idx]
+    first_us = first_us[conv_idx]
 
     out: dict[str, np.ndarray] = {}
 
@@ -82,21 +116,25 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
     is_tool = (role == "tool").astype(np.float64)
 
     # --- cumulative state (matches operators/state.py expressions) ----------
-    def seg_cumsum(v):
-        cs = np.cumsum(v)
-        base = np.where(gstart > 0, cs[gstart - 1], 0.0)
-        return cs - base
+    # context rows are masked out; every sum is integer-valued, so the
+    # chunked sums plus carries equal the unchunked ones exactly
+    realf = real.astype(np.float64)
 
-    turns = (pos + 1).astype(np.float64)
-    u = seg_cumsum(is_user)
-    a = seg_cumsum(is_assistant)
-    t_ = seg_cumsum(is_tool)
-    out["turn_pos"] = pos.astype(np.float64)
+    def seg_cumsum(v, field):
+        cs = np.cumsum(v * realf)
+        base = np.where(gstart > 0, cs[gstart - 1], 0.0)
+        return cs - base + carry[_CARRY.index(field)]
+
+    turns = seg_cumsum(1.0, "turns")
+    u = seg_cumsum(is_user, "user")
+    a = seg_cumsum(is_assistant, "assistant")
+    t_ = seg_cumsum(is_tool, "tool")
+    out["turn_pos"] = turns - 1.0
     out["turns_so_far"] = turns
     out["user_turns_so_far"] = u
     out["assistant_turns_so_far"] = a
     out["tool_turns_so_far"] = t_
-    out["chars_so_far"] = seg_cumsum(x)
+    out["chars_so_far"] = seg_cumsum(x, "chars")
 
     prev_us = np.empty(n, dtype=np.int64)
     prev_us[1:] = us[:-1]
@@ -104,7 +142,7 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
     first_row = pos == 0
     dt = np.where(first_row, 0.0, (us - prev_us) / 1e6)
     out["dt_seconds"] = dt
-    out["secs_since_start"] = (us - us[gstart]) / 1e6
+    out["secs_since_start"] = (us - first_us) / 1e6
 
     out["net_role_flow"] = (u - a) / (u + a + DIVISION_GUARD_EPS)
     out["net_tool_flow"] = (t_ - (u + a)) / (turns + DIVISION_GUARD_EPS)
@@ -114,7 +152,7 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
     gap_us = int(cfg.session_gap_s * 1e6)
     is_start = (first_row | ((us - prev_us) > gap_us)).astype(np.float64)
     out["is_session_start"] = is_start
-    out["session_id"] = seg_cumsum(is_start) - 1.0
+    out["session_id"] = seg_cumsum(is_start, "starts") - 1.0
 
     hr = (us // 3_600_000_000) % 24  # UTC hour (session tz pinned to UTC)
     out["time_regime"] = np.select(
@@ -150,7 +188,8 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
         var = np.maximum(sum_x2 / cnt - mean * mean, 0.0)
         std = np.sqrt(var)
         m3 = sum_x3 / cnt - 3 * mean * (sum_x2 / cnt) + 2 * mean * mean * mean
-        skew = np.where((cnt < 3) | (std < MIN_STD), 0.0, m3 / (std * std * std))
+        skew = np.divide(m3, std * std * std, out=np.zeros(n),
+                         where=(cnt >= 3) & (std >= MIN_STD))
         ssum_sq = sum_x * sum_x
         hhi = np.divide(sum_x2, ssum_sq, out=np.zeros(n), where=sum_x > 0)
 
@@ -208,50 +247,143 @@ def _kernel(pdf: pd.DataFrame, cfg: PipelineConfig, price_from_char_len: bool) -
     res["label"] = pd.arrays.IntegerArray(
         np.where(_mask, 0, label).astype(np.int8), _mask
     )
-    res["label_pct_change"] = r6_np(l)
-    return res[~np.isnan(l)].reset_index(drop=True)
+    res["label_pct_change"] = r6_np(l)  # NaN reaches Spark as null
+    keep = real & complete if labeled_only else real
+    return res[keep].reset_index(drop=True)
+
+
+def kernel_schema(cfg: PipelineConfig, ts_type: T.DataType) -> T.StructType:
+    """Output schema of the kernel: key, turn_idx, ts, the r6-rounded
+    contract features, label and label_pct_change."""
+    return T.StructType(
+        [T.StructField(cfg.key_col, T.StringType()),
+         T.StructField("turn_idx", T.IntegerType()),
+         T.StructField(cfg.ts_col, ts_type)]
+        + [T.StructField(c, T.DoubleType()) for c in feature_columns(cfg.window_sizes)]
+        + [T.StructField("label", T.ByteType()),
+           T.StructField("label_pct_change", T.DoubleType())]
+    )
+
+
+def _chunk_carries(long_rows: DataFrame, cfg: PipelineConfig) -> dict:
+    """Carry-in state of every chunk of the long conversations in
+    ``long_rows``: {(conv, chunk): (turns, user, assistant, tool, chars,
+    starts, first_us)} with exclusive prefix sums over the conversation's
+    earlier chunks (operators/skew.py's partial table). Each chunk's session
+    starts are its in-chunk gaps plus, at its first row, the gap to the
+    previous chunk's last row (the conversation's first row for chunk 0) —
+    no window over the conversation. One aggregation; the collect holds one
+    row per chunk, at most rows / skew_max_turns_per_task.
+    """
+    S = cfg.skew_max_turns_per_task
+    gap_us = int(cfg.session_gap_s * 1e6)
+    key, role = cfg.key_col, F.col("role")
+    # (turn_idx, us) pairs sort in the kernel's stable order (turn_idx, ts)
+    pts = F.array_sort(F.collect_list(F.struct("turn_idx", epoch_us(cfg.ts_col).alias("us"))))
+    n = F.size("pts") - 1
+    steps = F.zip_with(F.slice("pts", 2, n), F.slice("pts", 1, n),
+                       lambda b, a: b["us"] - a["us"] > gap_us)
+    parts = (
+        long_rows.groupBy(key, (F.col("turn_idx") / S).cast("long").alias("chunk"))
+        .agg(F.count(F.lit(1)).alias("turns"),
+             *[F.sum((role == r).cast("long")).alias(r) for r in ("user", "assistant", "tool")],
+             F.sum("char_len").alias("chars"), pts.alias("pts"))
+        .select(key, "chunk", *_SUMS,
+                F.size(F.filter(steps, lambda g: g)).alias("gaps"),
+                F.col("pts")[0]["us"].alias("first_us"),
+                F.element_at("pts", -1)["us"].alias("last_us"))
+        .collect()
+    )
+    carries, acc, first_us, last_us = {}, {}, {}, {}
+    for r in sorted(parts, key=lambda r: (r[key], r["chunk"])):
+        conv, c = r[key], r["chunk"]
+        if c == 0:
+            acc[conv], first_us[conv] = [0.0] * len(_CARRY), r["first_us"]
+            boundary = 1  # the conversation's first row
+        else:
+            boundary = int(r["first_us"] - last_us[conv] > gap_us)
+        carries[(conv, c)] = (*acc[conv], first_us[conv])
+        step = [r[f] for f in _SUMS] + [r["gaps"] + boundary]
+        acc[conv] = [x + float(y) for x, y in zip(acc[conv], step)]
+        last_us[conv] = r["last_us"]
+    return carries
+
+
+def _chunk_context(cfg: PipelineConfig) -> tuple[int, int]:
+    """Rows of back context (frames and lags) and forward context (label
+    horizon) each chunk needs from its neighbours."""
+    back = max(max(cfg.window_sizes), cfg.labels.smoothing_k)
+    fwd = cfg.labels.horizon
+    if cfg.skew_max_turns_per_task <= max(back, fwd):
+        raise ValueError("skew_max_turns_per_task must exceed the largest "
+                         "rolling window and the label horizon")
+    return back, fwd
+
+
+def _chunk_layout(narrow: DataFrame, cfg: PipelineConfig, long_convs: list,
+                  bucket) -> DataFrame:
+    """Rows of the long conversations become (conv, chunk) groups with
+    chunk = turn_idx // skew_max_turns_per_task, as operators/skew.add_chunks
+    lays them out: the last max(max(window_sizes), k) rows of chunk c-1 and
+    the first h rows of chunk c+1 are copied into chunk c as context
+    (_ctx = 1), so every frame and label horizon of a real row is exact.
+    Each such chunk is its own Arrow group (at most skew_max_turns_per_task
+    + context rows); every other conversation keeps its ``bucket`` group."""
+    S = cfg.skew_max_turns_per_task
+    back, fwd = _chunk_context(cfg)
+    is_long = F.col(cfg.key_col).isin(long_convs)
+    chunk = (F.col("turn_idx") / S).cast("long")
+    m = F.pmod(F.col("turn_idx"), F.lit(S))
+
+    def into(c, ctx):
+        return F.struct(c.alias("_chunk"), F.lit(ctx).alias("_ctx"))
+
+    copies = F.when(is_long, F.array_compact(F.array(
+        into(chunk, 0),
+        F.when(m >= S - back, into(chunk + 1, 1)),
+        F.when((m < fwd) & (chunk > 0), into(chunk - 1, 1)),
+    ))).otherwise(F.array(into(F.lit(0).cast("long"), 0)))
+    return narrow.select("*", F.inline(copies)).withColumn(
+        "_vb", F.when(is_long, F.xxhash64(cfg.key_col, "_chunk")).otherwise(bucket)
+    )
 
 
 def vectorized_flagship(df: DataFrame, cfg: PipelineConfig | None = None,
                         price_col: str = "char_len",
                         n_buckets: int | None = None,
-                        auto_skew: bool = True) -> DataFrame:
+                        auto_skew: bool = True,
+                        labeled_only: bool = True) -> DataFrame:
     """Single-pass compiled twin of flagship_pipeline(strategy='fused').
     Returns identical rows (tested).
 
-    auto_skew=True probes the longest conversation (one map-side max over a
-    pruned int column). If any conversation exceeds
-    cfg.skew_max_turns_per_task, those conversations' ids (a tiny list —
-    one groupBy row per conversation, filtered) are split out through the
-    chunked declarative path (plans.flagship_skewed, bit-identical rows)
-    and unioned back; everything else stays on this kernel. A mega
-    conversation otherwise lands whole in one Arrow bucket — an
-    unsplittable straggler + memory spike.
+    labeled_only=False keeps every clean input row (label and
+    label_pct_change null where the forward frame is incomplete) — the
+    production job's export.
+
+    auto_skew=True probes the longest conversation (parquet footers, else
+    one map-side max). If it exceeds cfg.skew_max_turns_per_task, the
+    conversations that do are split into (conv, chunk) groups of the same
+    kernel pass (_chunk_layout), with cumulative state carried in from a
+    small per-chunk table (_chunk_carries): bit-identical rows, and no
+    Arrow group holds a whole mega-conversation.
     """
     cfg = cfg or PipelineConfig()
-    if auto_skew and max_conv_turns(df) > cfg.skew_max_turns_per_task:
-        from .pipeline import flagship_skewed
+    grouped, carries = _kernel_groups(df, cfg, price_col, n_buckets, auto_skew)
+    schema = kernel_schema(cfg, grouped.schema[cfg.ts_col].dataType)
+    price_from_char_len = price_col == "char_len"
 
-        mega = [
-            r[0]
-            for r in df.groupBy(cfg.key_col)
-            .agg(F.max("turn_idx").alias("_m"))
-            .filter(F.col("_m") >= cfg.skew_max_turns_per_task)
-            .select(cfg.key_col)
-            .collect()
-        ]
-        rest = vectorized_flagship(
-            df.filter(~F.col(cfg.key_col).isin(mega)), cfg,
-            price_col=price_col, n_buckets=n_buckets, auto_skew=False,
-        )
-        skewed = flagship_skewed(
-            df.filter(F.col(cfg.key_col).isin(mega)), cfg, price_col=price_col
-        )
-        # align types to this kernel's output schema before the union
-        skewed = skewed.select(
-            *[F.col(f.name).cast(f.dataType) for f in rest.schema.fields]
-        )
-        return rest.unionByName(skewed)
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _kernel(pdf.drop(columns=["_vb"]), cfg, price_from_char_len,
+                       labeled_only, carries)
+
+    return grouped.groupBy("_vb").applyInPandas(fn, schema=schema)
+
+
+def _kernel_groups(df: DataFrame, cfg: PipelineConfig, price_col: str,
+                   n_buckets: int | None, auto_skew: bool) -> tuple[DataFrame, dict]:
+    """The kernel's input — clean rows, narrow columns, Arrow group key _vb —
+    and the chunk carries (empty unless the skew route is taken)."""
+    df = clean_input(df, cfg)
     cols = [cfg.key_col, *cfg.order_cols, "role",
             F.coalesce(F.length("text"), F.lit(0)).cast("double").alias("char_len")]
     if price_col != "char_len":
@@ -261,20 +393,15 @@ def vectorized_flagship(df: DataFrame, cfg: PipelineConfig | None = None,
     if n_buckets is None:
         sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
         n_buckets = max(sp * 4, 64)
-    bucketed = narrow.withColumn(
-        "_vb", F.pmod(F.xxhash64(cfg.key_col), F.lit(n_buckets)).cast("int")
-    )
-
-    fcols = feature_columns(cfg.window_sizes)
-    ts_type = narrow.schema[cfg.ts_col].dataType.simpleString()
-    out_schema = (
-        f"{cfg.key_col} string, turn_idx int, {cfg.ts_col} {ts_type}, "
-        + ", ".join(f"{c} double" for c in fcols)
-        + ", label tinyint, label_pct_change double"
-    )
-    price_from_char_len = price_col == "char_len"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _kernel(pdf.drop(columns=["_vb"]), cfg, price_from_char_len)
-
-    return bucketed.groupBy("_vb").applyInPandas(fn, schema=out_schema)
+    bucket = F.pmod(F.xxhash64(cfg.key_col), F.lit(n_buckets))
+    S = cfg.skew_max_turns_per_task
+    long_convs = []
+    if auto_skew and max_conv_turns(df) > S:
+        _chunk_context(cfg)  # fail before any job if chunks cannot hold it
+        # one row per conversation longer than S turns: at most rows / S
+        long_convs = sorted({r[0] for r in narrow.filter(F.col("turn_idx") == S)
+                             .select(cfg.key_col).collect()})
+    if not long_convs:
+        return narrow.withColumn("_vb", bucket.cast("int")), {}
+    carries = _chunk_carries(narrow.filter(F.col(cfg.key_col).isin(long_convs)), cfg)
+    return _chunk_layout(narrow, cfg, long_convs, bucket), carries

@@ -8,6 +8,8 @@ the write path). A hard gate raises before anything is written.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,6 +40,35 @@ def assert_no_nan_inf(df: DataFrame, cols: list[str]) -> None:
     bad = {c: n for c, n in nan_inf_counts(df, cols).items() if n > 0}
     if bad:
         raise ValidationError(f"NaN/Inf/null in feature columns: {bad}")
+
+
+_GATE_ERROR = "NaN/Inf/null in feature column "
+
+
+def with_nan_inf_gate(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Lazy form of assert_no_nan_inf that rides the pass consuming ``df``
+    (the export write) instead of running one of its own: each column in
+    ``cols`` is projected through a check whose first NaN/Inf/null fails
+    the task, and with it the action, naming the column. A failed write
+    never commits; raise_gate_failure turns the error into ValidationError.
+    """
+    # SQL text, one parse for all columns: building 60+ Column trees through
+    # py4j costs seconds of driver time
+    def checked(c: str) -> str:
+        q = f"`{c}`"
+        return (f"CASE WHEN isnan({q}) OR {q} IS NULL OR abs({q}) = double('inf') "
+                f"THEN raise_error('{_GATE_ERROR}{c}') ELSE {q} END AS {q}")
+
+    gated = set(cols)
+    return df.selectExpr(*[checked(c) if c in gated else f"`{c}`" for c in df.columns])
+
+
+def raise_gate_failure(exc: BaseException) -> None:
+    """Raise ValidationError, naming the column, if ``exc`` is an action
+    stopped by with_nan_inf_gate; otherwise return."""
+    m = re.search(re.escape(_GATE_ERROR) + r"(\w+)", str(exc))
+    if m:
+        raise ValidationError(f"NaN/Inf/null in feature columns: {m.group(1)}") from exc
 
 
 def assert_feature_contract(df: DataFrame, cfg: PipelineConfig) -> None:

@@ -2,6 +2,7 @@
 
 import json
 import math
+import os
 from pathlib import Path
 
 import pytest
@@ -14,6 +15,7 @@ from feature_extractor_mbo_lob_spark.export import (
     export_with_manifests,
     input_fingerprint_for_path,
     manifest_path,
+    schema_digest,
     valid_buckets,
 )
 
@@ -127,8 +129,62 @@ def test_valid_buckets_rejects_config_change(tmp_path, frame):
     out_dir = str(tmp_path / "exp2")
     export_with_manifests(frame, CFG, out_dir, "fp", n_buckets=2)
     other_cfg = PipelineConfig(window_sizes=(8,))
-    assert valid_buckets(out_dir, CFG.config_hash(), "fp")
-    assert not valid_buckets(out_dir, other_cfg.config_hash(), "fp")
+    version = schema_digest(frame.schema)
+    assert valid_buckets(out_dir, CFG.config_hash(), "fp", version)
+    assert not valid_buckets(out_dir, other_cfg.config_hash(), "fp", version)
+
+
+def test_schema_version_stable_across_processes():
+    """schema_version must not depend on the per-process str hash seed."""
+    import subprocess
+    import sys
+
+    code = (
+        "from pyspark.sql.types import *\n"
+        "from feature_extractor_mbo_lob_spark.export import schema_digest\n"
+        "print(schema_digest(StructType([StructField('conv_id', StringType()),"
+        " StructField('x', DoubleType())])))"
+    )
+    repo = str(Path(__file__).resolve().parent.parent)
+    digests = {
+        subprocess.run([sys.executable, "-c", code], check=True, capture_output=True,
+                       text=True, cwd=repo, env={**os.environ, "PYTHONHASHSEED": seed}
+                       ).stdout.strip()
+        for seed in ("1", "2")
+    }
+    assert len(digests) == 1 and len(digests.pop()) == 16
+
+
+def test_resume_rewrites_buckets_of_another_schema(tmp_path, frame):
+    """A bucket written with other columns is not skipped into a table of
+    mixed schemas: resume rewrites it."""
+    out_dir = str(tmp_path / "exp3")
+    first = export_with_manifests(frame.drop("y"), CFG, out_dir, "fp", n_buckets=2)
+    assert first["written_buckets"]
+    rep = export_with_manifests(frame, CFG, out_dir, "fp", n_buckets=2)
+    assert rep["written_buckets"] == first["written_buckets"] and not rep["skipped_buckets"]
+    assert not valid_buckets(out_dir, CFG.config_hash(), "fp",
+                             schema_digest(frame.drop("y").schema))
+    assert frame.sparkSession.read.parquet(out_dir).columns.count("y") == 1
+
+
+def test_nan_gate_rides_the_write_and_keeps_previous_export(tmp_path, frame):
+    """A NaN in a gated column aborts the write pass with ValidationError
+    naming the column; data and manifests of the previous run stay as they
+    were."""
+    out_dir = tmp_path / "exp4"
+    export_with_manifests(frame, CFG, str(out_dir), "fp", n_buckets=2, gate_cols=["x", "y"])
+
+    def snapshot():
+        return {str(p.relative_to(out_dir)): p.read_bytes()
+                for p in sorted(out_dir.rglob("*")) if p.is_file()}
+
+    before = snapshot()
+    bad = frame.withColumn("y", F.when(F.col("turn_idx") == 3, float("nan")).otherwise(F.col("y")))
+    with pytest.raises(val.ValidationError, match="y"):
+        export_with_manifests(bad, CFG, str(out_dir), "fp2", n_buckets=2,
+                              resume=False, gate_cols=["x", "y"])
+    assert snapshot() == before
 
 
 def test_input_fingerprint_changes_with_data(tmp_path, spark, frame):

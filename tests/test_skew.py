@@ -69,10 +69,30 @@ def test_chunk_size_must_exceed_window(corpus):
         build_features_skewed(corpus, CFG, chunk_turns=8)
 
 
-def test_flagship_auto_skew_routing_identical(corpus):
-    """flagship_pipeline / vectorized_flagship with a skew threshold the mega
-    conversation exceeds must route through the chunked path and still
-    return bit-identical rows (labels included) to the unrouted plan."""
+def _boundary_corpus(spark, corpus):
+    """The shared corpus plus conversations of exactly 2*50 and 2*50+1
+    turns, and one whose session gap falls on a chunk boundary (turn 100)."""
+    def conv(name, turns, seed, gap_at=None):
+        d = synth_transcripts(spark, n_convs=0, n_mega_convs=1, mega_turns=turns, seed=seed)
+        d = d.withColumn("conv_id", F.lit(name))
+        if gap_at is not None:  # > session_gap_s between turns gap_at-1 and gap_at
+            d = d.withColumn("ts", F.when(F.col("turn_idx") >= gap_at,
+                                          F.col("ts") + F.expr("INTERVAL 2 HOURS"))
+                             .otherwise(F.col("ts")))
+        return d
+
+    extra = [conv("even", 100, 11), conv("odd", 101, 12), conv("gap", 150, 13, gap_at=100)]
+    for d in extra:
+        corpus = corpus.unionByName(d)
+    return corpus.cache()
+
+
+def test_flagship_auto_skew_routing_identical(spark, corpus):
+    """flagship_pipeline / vectorized_flagship with a skew threshold the long
+    conversations exceed must route through their chunked paths and still
+    return bit-identical rows (labels included) to the unrouted plans —
+    including conversations ending exactly on or one past a chunk boundary
+    and a session gap on a boundary."""
     import dataclasses
 
     from feature_extractor_mbo_lob_spark.plans import flagship_pipeline
@@ -80,6 +100,7 @@ def test_flagship_auto_skew_routing_identical(corpus):
     from feature_extractor_mbo_lob_spark.plans.vectorized import vectorized_flagship
 
     assert max_conv_turns(corpus) == 300
+    df = _boundary_corpus(spark, corpus)
     cfg = dataclasses.replace(CFG, skew_max_turns_per_task=50)
 
     def grid(df):
@@ -87,13 +108,48 @@ def test_flagship_auto_skew_routing_identical(corpus):
         return {(r["conv_id"], r["turn_idx"]): [r[c] for c in cols[2:]]
                 for r in df.collect()}
 
-    plain = grid(flagship_pipeline(corpus, CFG, auto_skew=False))
-    routed = grid(flagship_pipeline(corpus, cfg))            # probe trips
-    direct = grid(flagship_skewed(corpus, cfg))
-    vec = grid(vectorized_flagship(corpus, cfg))             # split+union path
+    plain = grid(flagship_pipeline(df, CFG, auto_skew=False))
+    routed = grid(flagship_pipeline(df, cfg))               # probe trips
+    direct = grid(flagship_skewed(df, cfg))
+    vec = grid(vectorized_flagship(df, cfg))                # chunked kernel
+    vec_plain = grid(vectorized_flagship(df, cfg, auto_skew=False))
     assert plain == routed
     assert plain == direct
     assert plain == vec
+    assert plain == vec_plain
+    full = vectorized_flagship(df, cfg, labeled_only=False)
+    assert grid(full) == grid(vectorized_flagship(df, CFG, labeled_only=False))
+    gap = {r.turn_idx: r for r in full.filter(
+        (F.col("conv_id") == "gap") & F.col("turn_idx").isin(99, 100)).collect()}
+    assert gap[100].is_session_start == 1.0
+    assert gap[100].session_id == gap[99].session_id + 1.0
+
+
+def test_chunked_kernel_groups_are_bounded(spark, corpus):
+    """No Arrow group of a chunked conversation holds more than
+    skew_max_turns_per_task + context rows, or rows of two chunks."""
+    import dataclasses
+
+    from feature_extractor_mbo_lob_spark.plans.vectorized import _kernel_groups
+
+    S = 50
+    cfg = dataclasses.replace(CFG, skew_max_turns_per_task=S)
+    grouped, carries = _kernel_groups(_boundary_corpus(spark, corpus), cfg,
+                                      "char_len", None, True)
+    assert {conv for conv, _ in carries} == {"c6", "even", "odd", "gap"}
+    ctx = max(max(cfg.window_sizes), cfg.labels.smoothing_k) + cfg.labels.horizon
+    groups = (
+        grouped.filter(F.col("conv_id").isin("c6", "even", "odd", "gap"))
+        .groupBy("_vb")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum(1 - F.col("_ctx")).alias("real"),
+             F.countDistinct("conv_id", "_chunk").alias("chunks"))
+        .collect()
+    )
+    # one group per chunk: 300, 100, 101 and 150 turns (plus context-only
+    # groups past a last chunk, which the kernel drops)
+    assert sum(1 for g in groups if g.real) == 6 + 2 + 3 + 3
+    assert max(g.n for g in groups) <= S + ctx
+    assert all(g.chunks == 1 and g.real <= S for g in groups)
 
 
 def test_add_chunks_forward_context(spark):

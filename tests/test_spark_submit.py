@@ -2,7 +2,8 @@
 --py-files dist/engine.zip`, with the job script copied OUTSIDE the repo so
 every import must resolve from the shipped zip (the copied script's own
 repo-relative sys.path insert points at a directory that does not exist).
-Also proves manifest resume end-to-end: the second run skips all buckets.
+Also proves manifest resume end-to-end: the second run skips all buckets
+and, by its event log, runs no feature kernel at all.
 """
 
 from __future__ import annotations
@@ -32,7 +33,8 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
     shutil.copy(REPO / "jobs" / "run_pipeline.py", job)
     out_dir = tmp_path / "features"
 
-    def submit():
+    def submit(log_dir):
+        log_dir.mkdir()
         r = subprocess.run(
             [
                 str(SPARK_SUBMIT),
@@ -40,6 +42,9 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
                 "--py-files", str(zip_path),
                 "--conf", "spark.sql.adaptive.enabled=true",
                 "--conf", "spark.sql.shuffle.partitions=8",
+                "--conf", "spark.eventLog.enabled=true",
+                "--conf", "spark.eventLog.compress=false",
+                "--conf", f"spark.eventLog.dir={log_dir}",
                 str(job),
                 "--input", "/root/testdata/sf0.001",
                 "--input-format", "events",
@@ -53,14 +58,29 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
         metrics = [ln for ln in r.stdout.splitlines() if ln.startswith("{")]
         return json.loads(metrics[-1])
 
-    first = submit()
-    assert first["rows_out"] == 1000
+    def kernel_stages(log_dir):
+        """Stages that ran the pandas kernel, from the uncompressed event log."""
+        logs = [f for f in log_dir.rglob("*")
+                if f.is_file() and not f.name.startswith((".", "appstatus"))]
+        events = [json.loads(ln) for f in logs for ln in f.read_text().splitlines()]
+        return [
+            e["Stage Info"]["Stage ID"] for e in events
+            if e["Event"] == "SparkListenerStageCompleted"
+            and any("FlatMapGroupsInPandas" in (rdd.get("Scope") or "")
+                    for rdd in e["Stage Info"]["RDD Info"])
+        ]
+
+    first = submit(tmp_path / "log1")
+    assert first["rows_out"] == first["rows_in"] == 1000
     assert first["written_buckets"] == 2 and first["skipped_buckets"] == 0
+    assert first["chunked_convs"] == 0
     assert any(out_dir.rglob("*.parquet"))
+    assert len(kernel_stages(tmp_path / "log1")) == 1  # one kernel pass per launch
 
     # resume: manifests match config + input fingerprint -> nothing recomputed
-    second = submit()
+    second = submit(tmp_path / "log2")
     assert second["written_buckets"] == 0 and second["skipped_buckets"] == 2
+    assert kernel_stages(tmp_path / "log2") == []
 
 
 def test_profile_corpus_job_cli(tmp_path):

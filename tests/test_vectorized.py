@@ -18,14 +18,47 @@ def _rows(df):
     )
 
 
+def _with_null_keys(t):
+    """Adds rows with a null conv_id, ts or turn_idx — both plans must drop
+    them (plans.pipeline.clean_input)."""
+    import pyspark.sql.functions as F
+
+    row = t.filter(F.col("turn_idx") == 3)
+    return t.unionByName(row.withColumn("conv_id", F.lit(None).cast("string"))) \
+        .unionByName(row.withColumn("ts", F.lit(None).cast(t.schema["ts"].dataType))) \
+        .unionByName(row.withColumn("turn_idx", F.lit(None).cast("int")))
+
+
 def test_vectorized_equals_declarative(spark):
-    t = synth_transcripts(spark, n_convs=15, min_turns=5, max_turns=40,
-                          n_mega_convs=1, mega_turns=200, seed=7).cache()
+    t = _with_null_keys(synth_transcripts(spark, n_convs=15, min_turns=5, max_turns=40,
+                                          n_mega_convs=1, mega_turns=200, seed=7)).cache()
     a = _rows(flagship_pipeline(t, CFG, price_col="char_len"))
     b = _rows(vectorized_flagship(t, CFG, price_col="char_len"))
     assert len(a) == len(b)
     diffs = [(x, y) for x, y in zip(a, b) if x != y]
     assert not diffs, f"{len(diffs)} differing rows, e.g. {diffs[:1]}"
+
+
+def test_vectorized_all_rows_equal_declarative_export(spark):
+    """labeled_only=False (the production job's export): every clean row,
+    equal to the declarative features + TLOB labels rounded with r6, with
+    both label columns null on the same rows."""
+    import pyspark.sql.functions as F
+
+    from feature_extractor_mbo_lob_spark.labeling import tlob_labels
+    from feature_extractor_mbo_lob_spark.plans import build_features
+    from feature_extractor_mbo_lob_spark.plans.pipeline import r6
+
+    t = _with_null_keys(synth_transcripts(spark, n_convs=12, min_turns=3, max_turns=30,
+                                          seed=5)).cache()
+    feats = build_features(t, CFG, narrow=True).withColumn("_p", F.col("char_len"))
+    a = _rows(tlob_labels(feats, CFG, price_col="_p").select(
+        "conv_id", "turn_idx", "ts", *[r6(F.col(c)).alias(c) for c in CFG.feature_columns()],
+        F.col("label").cast("tinyint"), r6(F.col("label_pct_change"))))
+    b = _rows(vectorized_flagship(t, CFG, labeled_only=False))
+    assert len(b) == t.dropna(subset=["conv_id", "ts", "turn_idx"]).count()
+    assert a == b
+    assert any(r[-1] is None and r[-2] is None for r in b)
 
 
 def test_vectorized_partition_independence(spark):

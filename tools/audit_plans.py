@@ -80,7 +80,7 @@ def main() -> None:
     sections.append(summarize(
         "flagship skewed (chunked carry-in, auto-routed for mega-conversations)",
         flagship_skewed(t, CFG, price_col="char_len", chunk_turns=500),
-        "The skew path the default entrypoints route to when any "
+        "The skew path flagship_pipeline routes to when any "
         "conversation exceeds cfg.skew_max_turns_per_task: chunk-keyed "
         "window cascade + tiny carry table broadcast back + labels computed "
         "inside the same cascade via forward-context rows. Target: the "
